@@ -855,6 +855,12 @@ object DedupOps {
   def keyBucket(keys: Column*): Column =
     pmod(xxhash64(keys: _*), lit(keyBuckets)).cast("int")
 
+  /** The ≤ [[keyBuckets]] bucket values in a frame's `kb` column — the
+    * partition list a pruned membership read filters on, collected as
+    * a dimension-bounded driver list, never O(rows). */
+  private[graft] def bucketsOf(keyed: DataFrame): Seq[Int] =
+    keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
+
   /** doc_ids already folded into an index, read PRUNED to the given
     * key-hash buckets (≤ [[keyBuckets]] partition directories — per-
     * trigger read work is bounded by the batch's bucket span, not by
@@ -1048,7 +1054,7 @@ object DedupOps {
     val nBatchDf = batchDocs.agg(count(lit(1)).as("n_batch"))
     val keyed = batchDocs.select(col("doc_id"))
       .withColumn("kb", keyBucket(col("doc_id")))
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = bucketsOf(keyed)
     // `memberCount` ≥ 0 replaces the one non-batch-shaped input — the
     // ids-store count, whose file-listing cost grows with trigger
     // history between compactions — with a caller-maintained total

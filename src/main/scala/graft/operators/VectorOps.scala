@@ -1353,9 +1353,8 @@ object VectorOps {
     val spark = keyed.sparkSession
     if (!hExists(spark, s"$indexDir/ids/_SUCCESS"))
       writeIvfIds(spark, indexDir, listTable)
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
     val existing = Snapshot.read(spark, s"$indexDir/ids")
-      .filter(col("kb").isin(buckets: _*)).select("vec_id")
+      .filter(col("kb").isin(DedupOps.bucketsOf(keyed): _*)).select("vec_id")
     keyed.join(existing, Seq("vec_id"), "left_anti").localCheckpoint(true)
   }
 
@@ -1506,9 +1505,8 @@ object VectorOps {
     val kBuiltDf = cents.agg(count(lit(1)).cast("int").as("k_built"))
     val keyed = batch.select(col("vec_id"))
       .withColumn("kb", DedupOps.keyBucket(col("vec_id")))
-    val buckets = keyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
     val existing = Snapshot.read(spark, s"$indexDir/ids")
-      .filter(col("kb").isin(buckets: _*)).select("vec_id")
+      .filter(col("kb").isin(DedupOps.bucketsOf(keyed): _*)).select("vec_id")
     // the membership TOTAL is the one input whose default derivation
     // is not batch-shaped: counting the ids store reads a file count
     // that grows with trigger history between compactions (measured

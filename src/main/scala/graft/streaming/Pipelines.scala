@@ -241,78 +241,21 @@ object Pipelines {
     * queryable partitioned parquet table with exactly-once rows.
     *
     * The reference maps messages to TableRows and leans on the sink
-    * for dedup; here each micro-batch is merged idempotently — an
-    * anti-join on the (queue, message_id) key drops rows already in
-    * the table before appending. That makes the sink safe under BOTH
-    * broker redelivery (at-least-once upstream) and micro-batch replay
-    * after a crash (the same batch re-runs and every row anti-joins
-    * away). The table is partitioned by (queue, kb) — queue for the
-    * consumer-facing layout, kb (the key-hash bucket) so the key
-    * lookup prunes to the batch's buckets WITHIN each queue instead
-    * of growing with that queue's history (the
-    * [[decontaminationSink]] bounded-check rule). */
-  def tableSink(records: Dataset[GraftTextRecord], tablePath: String): DataStreamWriter[GraftTextRecord] = {
-    val dataPath = tablePath + "/data"
+    * for dedup; here each micro-batch goes through [[appendNewKeys]]
+    * on the (queue, message_id) key, which makes the sink safe under
+    * BOTH broker redelivery (at-least-once upstream) and micro-batch
+    * replay after a crash. The table is partitioned by (queue, kb) —
+    * queue for the consumer-facing layout, kb so the key lookup
+    * prunes to the batch's buckets WITHIN each of its queues. */
+  def tableSink(records: Dataset[GraftTextRecord], tablePath: String): DataStreamWriter[GraftTextRecord] =
     records.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
       .foreachBatch { (batch: Dataset[GraftTextRecord], _: Long) =>
-        val spark = batch.sparkSession
-        // redelivery can land BOTH copies of a message in one trigger —
-        // dedup inside the batch before the anti-join against the
-        // table. localCheckpoint (eager) so the SOURCE is read and the
-        // dedup shuffle runs ONCE per trigger: the queue list, the
-        // bucket list, and the write below all reuse the materialized
-        // batch instead of re-reading the source three times (the
-        // decontaminationSink convention).
-        val fresh = batch.toDF().dropDuplicates("queue", "message_id")
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("queue"), col("message_id")))
-          .localCheckpoint(true)
-        // the batch touches a handful of queues and ≤ keyBuckets hash
-        // buckets; filtering the existing table by both is a STATIC
-        // partition predicate, so the key lookup prunes to the batch's
-        // (queue, bucket) directories instead of scanning the whole
-        // table every trigger. Both lists are dimension-bounded driver
-        // collects (queue count, ≤ 64 bucket values) off the
-        // checkpointed batch.
-        val batchQueues = fresh.select("queue").distinct()
-          .collect().map(_.getString(0)).toSeq
-        val batchBuckets = bucketsOf(fresh.select("kb"))
-        // explicit existence probe, the prunedKeys rule: a catch-all
-        // here would read a pre-kb table as "absent" and append
-        // duplicates forever
-        val tablePath0 = new org.apache.hadoop.fs.Path(dataPath)
-        val tableFs = tablePath0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val existingKeys =
-          if (!tableFs.exists(tablePath0) || !hasParquetData(tableFs, tablePath0))
-            // first batch: no table (or no data) yet
-            spark.emptyDataFrame.select(lit("").as("queue"), lit(0L).as("message_id")).limit(0)
-          else {
-            val t = spark.read.parquet(dataPath)
-            // A pre-kb table must FAIL FAST, not degrade: the check
-            // side could read it unpruned, but this trigger's append
-            // would write partitionBy(queue, kb) directories into the
-            // queue-only tree, and the NEXT trigger's read of the
-            // mixed-depth directory structure throws and wedges the
-            // stream — with the first trigger's rows already
-            // committed. Refuse before writing anything.
-            if (!t.columns.contains("kb"))
-              throw new IllegalStateException(
-                s"$dataPath holds a pre-kb (queue-only) tableSink layout; " +
-                  "appending would mix partition depths and wedge the stream " +
-                  "on its next trigger. Run Pipelines.migrateTableToKb(spark, " +
-                  "tablePath) once (stream stopped) and resume.")
-            t.filter(col("queue").isin(batchQueues: _*))
-              .filter(col("kb").isin(batchBuckets: _*))
-              .select(col("queue"), col("message_id"))
-          }
-        fresh
-          .join(existingKeys, Seq("queue", "message_id"), "left_anti")
-          .write.mode("append").partitionBy("queue", "kb").parquet(dataPath)
-        ()
+        // redelivery can land BOTH copies of a message in one trigger
+        appendNewKeys(batch.toDF().dropDuplicates("queue", "message_id"),
+          tablePath + "/data", Seq("queue", "message_id"), Seq("queue"))
       }
-  }
 
   /** One-time migration of a pre-kb [[tableSink]] table (queue-only
     * partitioning, written before the kb layout) into the current
@@ -350,47 +293,66 @@ object Pipelines {
     spark.read.parquet(tablePath + "/data")
       .drop("kb") // layout detail, not consumer schema
 
-  // ---- bounded idempotency machinery for the foreachBatch sinks ----
-  //
-  // The sinks' exactly-once contract must survive CHECKPOINT LOSS
-  // (the specs replay the whole spool from a fresh checkpoint), so
-  // seen-keys cannot live in the state store — they live in the
-  // output table itself. To keep that check O(batch buckets) instead
-  // of O(table history), every sink table is Hive-partitioned by
-  // kb = pmod(xxhash64(key…), DedupOps.keyBuckets) and the per-
-  // trigger read is pruned to the buckets the batch actually hashes
-  // into: equal keys always share a bucket, so pruning never misses
-  // a duplicate, and a trigger touching k distinct keys reads at
-  // most min(k, keyBuckets)/keyBuckets of the key history.
-  //
-  // Migration note: a table written before the kb layout is REFUSED
-  // (fail-fast in tableSink and prunedKeys) rather than degraded-over:
-  // an unpruned check read would be correct, but the same trigger's
-  // append writes kb-partitioned directories into the unbucketed tree
-  // and the NEXT trigger's read of the mixed-depth structure throws —
-  // a wedged stream with one trigger already committed. The one-time
-  // rewrite is [[migrateTableToKb]] (run with the stream stopped).
+  /** The exactly-once write every foreachBatch sink shares: append the
+    * rows of `batch` (already deduplicated within the batch) whose
+    * `keyCols` key is not yet in the parquet table at `path`.
+    *
+    * Seen keys live in the output table, not the state store, so the
+    * contract survives CHECKPOINT LOSS: a fresh checkpoint replays the
+    * whole spool and every replayed row anti-joins away. The table is
+    * Hive-partitioned by `partitionCols :+ "kb"`, with kb =
+    * [[graft.operators.DedupOps.keyBucket]] over `keyCols` in order.
+    * Equal keys always share a bucket, so the check reads only the
+    * partitions holding the batch's own values ([[prunedKeys]]) and
+    * costs O(batch buckets), not O(table history). The batch is
+    * localCheckpointed once: its upstream runs once for the single
+    * driver collect of partition values, the check and the write. */
+  private[graft] def appendNewKeys(batch: DataFrame, path: String, keyCols: Seq[String],
+                                   partitionCols: Seq[String] = Nil): Unit = {
+    val parts = partitionCols :+ "kb"
+    val keyed = batch
+      .withColumn("kb", graft.operators.DedupOps.keyBucket(keyCols.map(col): _*))
+      .localCheckpoint(true)
+    val values = keyed.select(parts.map(col): _*).distinct().collect()
+    val present = parts.indices.map(i => parts(i) -> values.map(_.get(i)).distinct.toSeq)
+    keyed.join(prunedKeys(keyed.select(keyCols.map(col): _*), path, present),
+        keyCols, "left_anti")
+      .write.mode("append").partitionBy(parts: _*).parquet(path)
+  }
 
-  /** The ≤ [[graft.operators.DedupOps.keyBuckets]] bucket values
-    * present in a batch — a dimension-bounded driver list (the
-    * [[tableSink]] queue-list convention), never O(batch) rows. */
-  private[graft] def bucketsOf(batchKeyed: DataFrame): Seq[Int] =
-    batchKeyed.select("kb").distinct().collect().map(_.getInt(0)).toSeq
+  /** Keys (the columns of `keys`) already present in a kb-partitioned
+    * sink table, read pruned to the given values of its partition
+    * columns — static partition predicates, so the scan lists only
+    * those directories.
+    *
+    * A missing table, or a directory holding no parquet data (an
+    * all-empty partitioned append leaves only `_SUCCESS`), reads as
+    * empty with the schema of `keys`. That is an explicit existence
+    * check rather than a caught AnalysisException, so a table WITH
+    * data but no `kb` column (a pre-kb layout) fails fast instead of
+    * silently disabling the check: the caller's kb-partitioned append
+    * would mix partition depths, and the next trigger's read of that
+    * tree would throw with this trigger already committed. The one-time
+    * rewrite of a pre-kb [[tableSink]] table is [[migrateTableToKb]]. */
+  private[graft] def prunedKeys(keys: DataFrame, path: String,
+                                partitions: Seq[(String, Seq[Any])]): DataFrame = {
+    val spark = keys.sparkSession
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p) || !hasParquetData(fs, p)) keys.limit(0)
+    else {
+      val t = spark.read.parquet(path)
+      if (!t.columns.contains("kb"))
+        throw new IllegalStateException(
+          s"$path holds a pre-kb sink table (no kb partition column); appending " +
+            "would mix partition depths and wedge the stream on its next trigger. " +
+            "Rewrite it into the kb layout once, stream stopped (for a tableSink " +
+            "table: Pipelines.migrateTableToKb), before resuming.")
+      partitions.foldLeft(t) { case (df, (c, vs)) => df.filter(col(c).isin(vs: _*)) }
+        .select(keys.columns.toSeq.map(col): _*)
+    }
+  }
 
-  /** Keys already present in a kb-partitioned sink table, read pruned
-    * to `buckets` (a static partition predicate — the scan lists only
-    * those directories). First trigger: no table yet → empty frame
-    * with the right (long-typed) key schema. The absent-table case is
-    * an explicit EXISTENCE check, not a caught AnalysisException — a
-    * catch-all would also swallow a schema problem (e.g. resuming
-    * over a table written in a pre-kb layout) and silently disable
-    * the idempotency check; a legacy layout instead degrades to the
-    * UNPRUNED key read, which is correct, just not bounded. */
-  /** Does the directory hold any parquet DATA? An existing dir with
-    * only markers (an all-empty first append leaves `_SUCCESS` and no
-    * footers) is still an absent table — but only this case is: a dir
-    * WITH data and an unexpected schema must fail loudly, not be
-    * silently treated as empty. */
   private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
                              p: org.apache.hadoop.fs.Path): Boolean = {
     val it = fs.listFiles(p, true)
@@ -398,27 +360,6 @@ object Pipelines {
     while (!found && it.hasNext)
       found = it.next().getPath.getName.endsWith(".parquet")
     found
-  }
-
-  private[graft] def prunedKeys(spark: SparkSession, path: String,
-                                keyCols: Seq[String], buckets: Seq[Int]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) || !hasParquetData(fs, p))
-      spark.range(0).select(keyCols.map(k => col("id").as(k)): _*)
-    else {
-      val t = spark.read.parquet(path)
-      // the tableSink fail-fast rule: the caller is about to APPEND a
-      // kb-partitioned tree; degrading the read over an unbucketed
-      // table would let that append mix partition depths and wedge
-      // the stream one trigger later
-      if (!t.columns.contains("kb"))
-        throw new IllegalStateException(
-          s"$path holds a pre-kb (unbucketed) sink table; appending would " +
-            "mix partition depths and wedge the stream on its next trigger. " +
-            "Rewrite it into the kb layout once (stream stopped) before resuming.")
-      t.filter(col("kb").isin(buckets: _*)).select(keyCols.map(col): _*)
-    }
   }
 
   /** One deterministic row per doc_id within a trigger: the latest
@@ -465,10 +406,9 @@ object Pipelines {
         val spark = batch.sparkSession
         import graft.functions.Texts.{kGrams, tokens}
         val bench = spark.read.parquet(benchGramsDir)
-        // referenced four times below (bucket list, hits, both splits)
-        // — localCheckpoint so the version-resolve shuffle runs once
+        // referenced three times below (hits, both splits) —
+        // localCheckpoint so the version-resolve shuffle runs once
         val docs = latestDocVersion(batch).localCheckpoint(true)
-        val buckets = bucketsOf(docs)
         // referenced by BOTH writes below — localCheckpoint so the gram
         // explode + bench join runs once per trigger, not per sink
         val hits = docs
@@ -478,15 +418,9 @@ object Pipelines {
           .groupBy(col("doc_id"))
           .agg(count_distinct(col("gram")).as("n_hits"))
           .localCheckpoint(true)
-        val dirty = docs.join(hits, Seq("doc_id"))
-        val clean = docs.join(hits, Seq("doc_id"), "left_anti")
-        dirty.join(prunedKeys(spark, tablePath + "/quarantine", Seq("doc_id"), buckets),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(tablePath + "/quarantine")
-        clean.join(prunedKeys(spark, tablePath + "/clean", Seq("doc_id"), buckets),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(tablePath + "/clean")
-        ()
+        appendNewKeys(docs.join(hits, Seq("doc_id")), tablePath + "/quarantine", Seq("doc_id"))
+        appendNewKeys(docs.join(hits, Seq("doc_id"), "left_anti"), tablePath + "/clean",
+          Seq("doc_id"))
       }
   }
 
@@ -740,7 +674,6 @@ object Pipelines {
                            graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
                            maxMergeJobs: Int = 3)
       : DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
     // running membership total for the drift report's size signal —
     // the vectorIndexSink idiom (seed once, advance per fold)
     var memberCount = -1L
@@ -774,23 +707,16 @@ object Pipelines {
         // version wins for an edited re-ingest — the index keeps one
         // deterministic copy per doc_id until a periodic rebuild.
         val newDocs = docs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(docs)),
+          graft.operators.DedupOps.indexedIds(spark, indexDir,
+            graft.operators.DedupOps.bucketsOf(docs)),
           Seq("doc_id"), "left_anti").select("doc_id", "text").localCheckpoint(true)
         if (!newDocs.isEmpty) {
           graft.operators.DedupOps.incrementalIndexUpdate(spark, newDocs, indexDir)
           if (memberCount >= 0) memberCount += newDocs.count()
         }
-        // pairs feed the bucket list AND the anti-joined write —
-        // localCheckpoint so the probe's verify join runs once
-        val pairs = graft.operators.DedupOps
-          .probeIndex(spark, docs.select("doc_id", "text"), indexDir)
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
-          .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
+        appendNewKeys(graft.operators.DedupOps
+          .probeIndex(spark, docs.select("doc_id", "text"), indexDir),
+          tablePath + "/data", Seq("doc_a", "doc_b"))
         // same per-trigger tail-latency bound as vectorIndexSink:
         // merge JOBS capped so a multi-store wave never stalls one
         // trigger on sequential merges (deferred leaves drain
@@ -847,9 +773,11 @@ object Pipelines {
                      maintain: Boolean = true,
                      graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
                      maxMergeJobs: Int = 3): DataStreamWriter[Row] =
-    sigIndexSink(messages,
-      graft.operators.MultimodalOps.imagePhashSigsOf,
-      graft.operators.MultimodalOps.imagePhashPopulation,
+    sigIndexSink(messages, graft.operators.MultimodalOps.imagePhashSigsOf, Seq("doc_id", "sig"),
+      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
+        graft.operators.MultimodalOps.imagePhashPopulation),
+      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
+        graft.operators.MultimodalOps.imagePhashPopulation),
       indexDir, tablePath, maintain, graceMs, maxMergeJobs)
 
   /** Ingestion-time AUDIO dedup on the stream — the FIFTH signature
@@ -866,21 +794,27 @@ object Pipelines {
                           maintain: Boolean = true,
                           graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
                           maxMergeJobs: Int = 3): DataStreamWriter[Row] =
-    sigIndexSink(messages,
-      graft.operators.MultimodalOps.audioPhashSigsOf,
-      graft.operators.MultimodalOps.audioPhashPopulation,
+    sigIndexSink(messages, graft.operators.MultimodalOps.audioPhashSigsOf, Seq("doc_id", "sig"),
+      graft.operators.MultimodalOps.phashIndexUpdate(_, _, _,
+        graft.operators.MultimodalOps.audioPhashPopulation),
+      graft.operators.MultimodalOps.phashProbeIndex(_, _, _,
+        graft.operators.MultimodalOps.audioPhashPopulation),
       indexDir, tablePath, maintain, graceMs, maxMergeJobs)
 
-  /** The shared (doc_id, sig)-granularity signature-ingestion sink the
-    * image and audio families instantiate with their signer +
-    * population marker. */
+  /** The signature-ingestion sink the image, audio and video families
+    * instantiate. Each trigger's latest doc versions are signed by
+    * `signer` into `sigCols` rows (doc_id first); the rows of doc_ids
+    * not yet in the index are folded in by `fold`, and `probe` then
+    * pairs the whole batch against the index — update-before-probe.
+    * The (doc_a, doc_b) pairs go through [[appendNewKeys]]. */
   private def sigIndexSink(messages: DataFrame,
                            signer: DataFrame => DataFrame,
-                           population: String,
+                           sigCols: Seq[String],
+                           fold: (SparkSession, DataFrame, String) => Unit,
+                           probe: (SparkSession, DataFrame, String) => DataFrame,
                            indexDir: String, tablePath: String,
                            maintain: Boolean, graceMs: Long,
-                           maxMergeJobs: Int): DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
+                           maxMergeJobs: Int): DataStreamWriter[Row] =
     messages.writeStream
       .outputMode("append")
       .option("checkpointLocation", tablePath + "/_checkpoint")
@@ -894,20 +828,12 @@ object Pipelines {
           .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
           .localCheckpoint(true)
         val newSigs = sigs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(sigs)),
-          Seq("doc_id"), "left_anti").select("doc_id", "sig").localCheckpoint(true)
-        if (!newSigs.isEmpty)
-          graft.operators.MultimodalOps.phashIndexUpdate(
-            spark, newSigs, indexDir, population)
-        val pairs = graft.operators.MultimodalOps
-          .phashProbeIndex(spark, sigs.select("doc_id", "sig"), indexDir, population)
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
-          .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
+          graft.operators.DedupOps.indexedIds(spark, indexDir,
+            graft.operators.DedupOps.bucketsOf(sigs)),
+          Seq("doc_id"), "left_anti").select(sigCols.map(col): _*).localCheckpoint(true)
+        if (!newSigs.isEmpty) fold(spark, newSigs, indexDir)
+        appendNewKeys(probe(spark, sigs.select(sigCols.map(col): _*), indexDir),
+          tablePath + "/data", Seq("doc_a", "doc_b"))
         if (maintain) {
           graft.operators.Snapshot.compactTiered(
             spark, s"$indexDir/bands", graceMs = graceMs,
@@ -918,7 +844,6 @@ object Pipelines {
         }
         ()
       }
-  }
 
   /** Ingestion-time VIDEO dedup on the stream — the [[phashIndexSink]]
     * composition at the video granularity, closing the batch/stream
@@ -942,46 +867,12 @@ object Pipelines {
                           tablePath: String,
                           maintain: Boolean = true,
                           graceMs: Long = graft.operators.Snapshot.DefaultGraceMs,
-                          maxMergeJobs: Int = 3): DataStreamWriter[Row] = {
-    val dataPath = tablePath + "/data"
-    messages.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", tablePath + "/_checkpoint")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        // deterministic within-trigger winner, then demux+sign;
-        // materialized for the same three-consumer/self-scan reasons
-        // as the image sink
-        val sigs = graft.operators.MultimodalOps
-          .videoPhashSigsOf(latestDocVersion(batch))
-          .withColumn("kb", graft.operators.DedupOps.keyBucket(col("doc_id")))
-          .localCheckpoint(true)
-        val newSigs = sigs.join(
-          graft.operators.DedupOps.indexedIds(spark, indexDir, bucketsOf(sigs)),
-          Seq("doc_id"), "left_anti")
-          .select("doc_id", "slot", "sig").localCheckpoint(true)
-        if (!newSigs.isEmpty)
-          graft.operators.MultimodalOps.videoPhashIndexUpdate(spark, newSigs, indexDir)
-        val pairs = graft.operators.MultimodalOps
-          .videoPhashProbeIndex(spark, sigs.select("doc_id", "slot", "sig"), indexDir)
-          .withColumn("kb",
-            graft.operators.DedupOps.keyBucket(col("doc_a"), col("doc_b")))
-          .localCheckpoint(true)
-        pairs.join(
-            prunedKeys(spark, dataPath, Seq("doc_a", "doc_b"), bucketsOf(pairs)),
-            Seq("doc_a", "doc_b"), "left_anti")
-          .write.mode("append").partitionBy("kb").parquet(dataPath)
-        if (maintain) {
-          graft.operators.Snapshot.compactTiered(
-            spark, s"$indexDir/bands", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-          graft.operators.Snapshot.compactTieredPartitioned(
-            spark, s"$indexDir/ids", graceMs = graceMs,
-            maxMergeJobs = maxMergeJobs)
-        }
-        ()
-      }
-  }
+                          maxMergeJobs: Int = 3): DataStreamWriter[Row] =
+    sigIndexSink(messages, graft.operators.MultimodalOps.videoPhashSigsOf,
+      Seq("doc_id", "slot", "sig"),
+      graft.operators.MultimodalOps.videoPhashIndexUpdate,
+      graft.operators.MultimodalOps.videoPhashProbeIndex,
+      indexDir, tablePath, maintain, graceMs, maxMergeJobs)
 
   /** SolaceIO withMaxReadTime equivalent: start the query with
     * Trigger.AvailableNow — the source freezes the backlog snapshot

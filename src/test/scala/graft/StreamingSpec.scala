@@ -1142,7 +1142,7 @@ class StreamingSpec extends AnyFunSuite {
       "seed must leave some buckets empty for the zero-read case")
 
     def scannedFiles(buckets: Seq[Int]): (Long, Long) = {
-      val df = Pipelines.prunedKeys(spark, table, Seq("doc_id"), buckets)
+      val df = Pipelines.prunedKeys(spark.range(0).toDF("doc_id"), table, Seq("kb" -> buckets))
       // collect() executes THIS dataset's plan (count() would build a
       // fresh QueryExecution and leave these metrics untouched)
       val n = df.collect().length.toLong
@@ -1165,6 +1165,85 @@ class StreamingSpec extends AnyFunSuite {
     val (readNone, rowsNone) = scannedFiles(empty.take(3))
     assert(readNone === 0, "untouched buckets must cost zero reads")
     assert(rowsNone === 0)
+
+    // partition columns prune too: in a (queue, kb) table a batch that
+    // touches one queue reads only that queue's files in the batch's
+    // buckets — a kb-only predicate would also read the other queue's
+    val qtable = tmpDir("graft-qtable") + "/data"
+    val msgKey = Seq("queue", "message_id")
+    // local rows, not literal columns: a literal queue would let the
+    // optimizer infer the queue filter from the batch side by itself
+    def msgs(q: String, from: Long, until: Long) =
+      spark.createDataFrame((from until until).map(q -> _)).toDF("queue", "message_id")
+    Pipelines.appendNewKeys(msgs("qa", 0, 200).union(msgs("qb", 0, 200)), qtable, msgKey,
+      Seq("queue"))
+    val batch = msgs("qa", 200, 203)
+    val batchBuckets = operators.DedupOps.bucketsOf(
+      batch.withColumn("kb", operators.DedupOps.keyBucket(col("queue"), col("message_id"))))
+    def queueFiles(q: String): Int =
+      batchBuckets.map(b => filesUnder(new java.io.File(s"$qtable/queue=$q/kb=$b"))).sum
+    val (qaFiles, qbFiles) = (queueFiles("qa"), queueFiles("qb"))
+    assert(qaFiles > 0 && qbFiles > 0, "both queues must hold files in the batch's buckets")
+    val readQueue = scannedFilesOf(qtable) {
+      Pipelines.appendNewKeys(batch, qtable, msgKey, Seq("queue"))
+    }
+    assert(readQueue === qaFiles, "scan must read only the batch's queue and buckets")
+    assert(spark.read.parquet(qtable).count() === 403)
+
+    // an all-empty partitioned append leaves only `_SUCCESS`: that
+    // directory reads as an empty table with the key schema, and the
+    // next append lands every row
+    val hollow = tmpDir("graft-hollow") + "/data"
+    spark.range(0).select(col("id").as("doc_id"), lit(0).as("kb"))
+      .write.partitionBy("kb").parquet(hollow)
+    assert(filesUnder(new java.io.File(hollow)) === 0)
+    val none = Pipelines.prunedKeys(spark.range(3).toDF("doc_id"), hollow, Seq("kb" -> Seq(0)))
+    assert(none.count() === 0)
+    assert(none.schema.map(f => f.name -> f.dataType) ===
+      Seq("doc_id" -> org.apache.spark.sql.types.LongType))
+    Pipelines.appendNewKeys(spark.range(5).toDF("doc_id"), hollow, Seq("doc_id"))
+    assert(spark.read.parquet(hollow).count() === 5)
+
+    // a kb-keyed append over a table whose data has no kb column (a
+    // pre-kb layout) refuses before writing anything
+    val legacy = tmpDir("graft-legacy") + "/data"
+    spark.range(5).toDF("doc_id").write.parquet(legacy)
+    val e = intercept[IllegalStateException] {
+      Pipelines.appendNewKeys(spark.range(3, 8).toDF("doc_id"), legacy, Seq("doc_id"))
+    }
+    assert(e.getMessage.contains("pre-kb"))
+    val untouched = spark.read.parquet(legacy)
+    assert(untouched.count() === 5 && !untouched.columns.contains("kb"))
+  }
+
+  /** Parquet files read by the scans of `path` in the queries `body`
+    * runs — the `numFiles` metric of each scan in their executed plans,
+    * AQE stages included. Waits for the scan's query to be reported
+    * (the listener bus is asynchronous). */
+  private def scannedFilesOf(path: String)(body: => Unit): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    val root = new java.io.File(path).getCanonicalPath
+    val files = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val scans = plans.collect(qe.executedPlan) {
+          case s: FileSourceScanExec if s.relation.location.rootPaths
+              .exists(p => new java.io.File(p.toUri.getPath).getCanonicalPath == root) =>
+            s.metrics("numFiles").value
+        }
+        if (scans.nonEmpty) files.set(scans.sum)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.currentTimeMillis() + 30000
+      while (files.get() < 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(files.get() >= 0, s"no scan of $path was reported")
+    files.get()
   }
 
   test("withMaxReadTime: AvailableNow drains the snapshot; deadline caps a slow read") {
